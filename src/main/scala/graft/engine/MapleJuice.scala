@@ -72,7 +72,13 @@ object MapleJuice {
   /** Typed juice = group-by-key + per-key reduction closure (reference
     * D6: `juice_exe(key, fileOfValues)`, `MapleJuice.java:615-665`).
     * `flatMapGroups` so a juice may emit 0..n results, matching the
-    * executable contract (stdout lines, `win_juice2.py:48-56`). */
+    * executable contract (stdout lines, `win_juice2.py:48-56`).
+    *
+    * It shuffles every value: there is no map-side combine, since the
+    * closure sees the whole group at once. For an associative fold use
+    * a typed `Aggregator` via `groupByKey(...).agg(agg.toColumn)`
+    * instead, which Spark plans partial + final like `juiceAgg` —
+    * `Workloads.condorcet` does so with `graft.functions.MajorityVote`. */
   def juice[I, K: Encoder, O: Encoder](ds: Dataset[I])(key: I => K)(
       fn: (K, Iterator[I]) => IterableOnce[O])(implicit kv: Encoder[(K, I)]): Dataset[O] =
     ds.groupByKey(key).flatMapGroups((k: K, it: Iterator[I]) => fn(k, it).iterator)

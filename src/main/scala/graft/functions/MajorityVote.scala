@@ -8,6 +8,11 @@ import org.apache.spark.sql.expressions.Aggregator
   * `Aggregator[IN, BUF, OUT]` — the algebraic form of a juice
   * executable (SURVEY §2.12): partial buffers merge associatively, so
   * Spark plans it partial+final like any built-in aggregate.
+  *
+  * Two callers: `q_majority_vote_typed` (as a UDAF over lineitem) and
+  * the typed Condorcet stage-1 juice in `graft.workloads.Workloads.condorcet`
+  * (via `groupByKey(...).agg(MajorityVote.toColumn)`), where the
+  * map-side partial shuffles one tally per pair instead of every vote.
   */
 object MajorityVote extends Aggregator[Boolean, (Long, Long), String] {
   override def zero: (Long, Long) = (0L, 0L)

@@ -1,11 +1,32 @@
 package graft.workloads
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.Dataset
+
+import scala.collection.mutable
+
 import graft.SparkSuite
 
 /** Reference-fidelity tests (FIXTURES.md §A): original web-graph /
   * ballot / word-count semantics over tiny in-memory fixtures. */
 class WorkloadsSpec extends SparkSuite {
   import spark.implicits._
+
+  /** 3,005 seeded ballots over A-D in 4 partitions, so partial tallies
+    * merge across map tasks. Pinned margins: A beats B by exactly one
+    * vote and C#D ties exactly (→ D, win_juice1.py:29), so A, B and D
+    * each dominate 2 — and the answer changes if either close pair is
+    * miscounted. The seeded noise ballots come with their reverse,
+    * which cancels on every pair. */
+  private lazy val closeCall: Dataset[String] = {
+    val rnd = new scala.util.Random(42)
+    val core = Seq("A,B,C", "A,B,C", "B,C,D", "B,D,A", "D,A,C")
+    val noise = Seq.fill(1500) {
+      val b = rnd.shuffle(Seq("A", "B", "C", "D")).take(3)
+      Seq(b.mkString(","), b.reverse.mkString(","))
+    }.flatten
+    spark.createDataset(rnd.shuffle(core ++ noise)).repartition(4).localCheckpoint()
+  }
 
   test("web-graph in-degree: filter range + swap + count (wg_maple/wg_juice)") {
     val edges = spark.createDataset(Seq(
@@ -48,6 +69,49 @@ class WorkloadsSpec extends SparkSuite {
       val columnar = Workloads.condorcetColumnar(ds).collect().map(_.toString).toSeq
       assert(typed == columnar, s"ballots=$ballots")
     }
+    val typed = Workloads.condorcet(closeCall).as[(String, Long, String)].collect().toSeq
+    assert(typed == Workloads.condorcetColumnar(closeCall).as[(String, Long, String)].collect().toSeq)
+    assert(typed == Seq(("A", 2L, "tie_argmax"), ("B", 2L, "tie_argmax"), ("D", 2L, "tie_argmax")))
+  }
+
+  test("typed condorcet combines map-side: shuffle records ≤ pairs × map tasks") {
+    // the BenchProfile listener, restricted to stages of jobs tagged
+    // from this thread; a marker job after the op is the barrier: the
+    // bus delivers in order, so once its start arrives every stage of
+    // the op has been counted
+    val tag = "graft.test.op"
+    val counted = mutable.Set[Int]()
+    @volatile var records = 0L
+    @volatile var drained = false
+    val acc = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("condorcet") => counted ++= e.stageIds
+          case Some("marker") => drained = true
+          case _ =>
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (counted(e.stageInfo.stageId))
+          records += e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
+    }
+    val sc = spark.sparkContext
+    assert(closeCall.rdd.getNumPartitions == 4)
+    sc.addSparkListener(acc)
+    try {
+      sc.setLocalProperty(tag, "condorcet")
+      Workloads.condorcet(closeCall)
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not drain")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(acc)
+    }
+    // 6 distinct pairs × 4 map tasks; a juice without map-side
+    // combine writes one record per vote, 3 × 3,005 = 9,015
+    assert(records > 0 && records <= 6 * 4, s"shuffle records written: $records")
   }
 
   test("condorcet fails fast on ballot sets wider than the candidate bound") {
